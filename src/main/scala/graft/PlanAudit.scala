@@ -1,13 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Dev tool: dump physical plans for representative queries to audit
   * pushdown / pruning / join strategy / codegen coverage. */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession(GraftSession.envCores)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.01"
     val names = if (args.nonEmpty) args.toSeq else Seq(

@@ -1,17 +1,10 @@
 // Ad-hoc single-query timing + plan dump: sbt "runMain graft.QTime q16_distinct_approx"
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 object QTime {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
+    val spark = GraftSession(GraftSession.envCores)
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000L).agg(org.apache.spark.sql.functions.sum("id")).collect()
     args.foreach { name =>

@@ -47,7 +47,7 @@ object SparkEntry {
 object QueryCatalog {
 
   /** Resolve one spec by its registered name. Auxiliary drivers
-    * (QTime / FloorProbe / PlanAudit / ScratchTime) MUST go through
+    * (QTime / FloorProbe / PlanAudit) MUST go through
     * this + [[QuerySpec.withConfs]] rather than the bare name→fn map:
     * a spec's execution confs (e.g. q157's object-agg sort-fallback
     * threshold) are applied by Verify/Bench, and a probe that skips

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,31 +6,29 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, rest @ _*) = args
     val wanted = rest.toSet // optional extra args: dev-only query filter
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
+    val spark = GraftSession(GraftSession.envCores)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    QueryCatalog.all
+    val failed = QueryCatalog.all
       .filter(sp => wanted.isEmpty || wanted.contains(sp.name))
-      .foreach { sp =>
+      .flatMap { sp =>
       // per-spec execution confs (QuerySpec.confs) scope around the
       // run and restore after — results never depend on them
-      try sp.withConfs(spark) {
-        sp.fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/${sp.name}")
+      try {
+        sp.withConfs(spark) {
+          sp.fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/${sp.name}")
+        }
+        None
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] ${sp.name} failed:")
+        e.printStackTrace()
+        Some(sp.name)
+      } finally {
+        // queries that persist intermediates (IVF centroids, LSH shingle
+        // tables) must not stack cached blocks across a 51-query session
+        spark.catalog.clearCache()
       }
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] ${sp.name} failed: ${e.getMessage}")
-      }
-      // queries that persist intermediates (IVF centroids, LSH shingle
-      // tables) must not stack cached blocks across a 51-query session
-      spark.catalog.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -49,5 +46,7 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    println(s"[verify] ${failed.size} failed" +
+      (if (failed.isEmpty) "" else failed.mkString(": ", " ", "")))
   }
 }

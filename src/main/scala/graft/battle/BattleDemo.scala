@@ -1,6 +1,6 @@
 package graft.battle
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** End-to-end battle-domain demo: the engine-side replication of the
   * reference's notebook flow (clash_agent_demo.ipynb cells 1-6, minus
@@ -12,13 +12,7 @@ import org.apache.spark.sql.SparkSession
   */
 object BattleDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-battle-demo")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(GraftSession.envCores)
     spark.sparkContext.setLogLevel("WARN")
 
     // ---- Phase 1: raw JSON → normalize → classify → user analytics

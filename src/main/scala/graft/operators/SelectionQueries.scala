@@ -759,7 +759,6 @@ object SelectionQueries {
     * CommonCrawl snapshot. */
   private def q145(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val whole = Window.partitionBy().rowsBetween(Long.MinValue, Long.MaxValue)
     val walk = Window.partitionBy(col("source"))
       .orderBy(col("pri"), col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, 0)

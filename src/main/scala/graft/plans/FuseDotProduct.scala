@@ -18,9 +18,8 @@ import org.apache.spark.sql.types.DoubleType
   * left-to-right fold otherwise — see DotProductDSpec).
   *
   * This is the library's "write it declaratively, let the optimizer pick
-  * the kernel" story: callers (and the VectorMath fallback path) can use
-  * the portable HOF form; sessions with GraftExtensions installed
-  * execute the fused loop.
+  * the kernel" story: a caller that writes the portable HOF form (q28's
+  * plane buckets in SimilarityQueries) executes the fused loop.
   */
 class FuseDotProduct extends Rule[LogicalPlan] {
 

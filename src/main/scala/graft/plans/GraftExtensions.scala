@@ -6,9 +6,8 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Engine extension point (SparkSessionExtensions): registers graft's
-  * native expressions as SQL functions. Install with
-  * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`
-  * (done by Verify/Bench/tests) or `withExtensions(new GraftExtensions)`.
+  * native expressions as SQL functions. The queries call them directly,
+  * so every session must install it — [[graft.GraftSession]] does.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -163,7 +162,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         val tau = t.eval() match {
           case n: Number => n.doubleValue
           case d: org.apache.spark.sql.types.Decimal => d.toDouble
-          case other => throw new org.apache.spark.sql.AnalysisException(
+          case _ => throw new org.apache.spark.sql.AnalysisException(
             errorClass = "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE",
             messageParameters = Map(
               "sqlExpr" -> "\"graft_cell_dups\"",
@@ -195,7 +194,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         val tau = t.eval() match {
           case n: Number => n.doubleValue
           case d: org.apache.spark.sql.types.Decimal => d.toDouble
-          case other => throw new org.apache.spark.sql.AnalysisException(
+          case _ => throw new org.apache.spark.sql.AnalysisException(
             errorClass = "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE",
             messageParameters = Map(
               "sqlExpr" -> "\"graft_cell_top_pairs\"",

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev scratch: print a query's FINAL (post-AQE) physical plan at an
   * arbitrary sf dir — run the plan first, then dump the adaptively
   * re-planned tree (explain("formatted") alone shows the initial one). */
@@ -9,14 +7,7 @@ object ScratchExplain {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val name = if (args.length > 1) args(1) else "q07_symmetric_matchups"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_PARTS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = GraftSession(GraftSession.envCores)
     spark.sparkContext.setLogLevel("WARN")
     try {
       val df = SparkEntry.queries(name)(spark, dir)

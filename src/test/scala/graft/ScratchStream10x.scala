@@ -2,7 +2,6 @@ package graft
 
 import graft.operators.{ClassifierQueries, SelectionQueries}
 import graft.streaming.{CentroidStream, GramStream, PackingStream, QualityStream, SpanStream}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -43,14 +42,9 @@ object ScratchStream10x {
     // match the corpus the replica in `dir` was scaled from (previously
     // hardcoded to sf0.1, which silently mixed corpora for other dirs)
     val baseDir = if (args.length > 4) args(4) else "/root/testdata/sf0.1"
-    val builder = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    if (rocks) builder.config("spark.sql.streaming.stateStore.providerClass",
+    val spark = GraftSession(GraftSession.envCores)
+    if (rocks) spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -552,7 +552,6 @@ class CurationOpsSpec extends SparkSpec {
         r.getAs[Long]("reject_multi"), r.getAs[Long]("reject_ppm")))
     assert(got.toSeq === want)
     // corpus-level: each rule fires somewhere, none rejects everything
-    val tot = got.map(g => (g._3 + g._4 + g._5 + g._6, g._2, g._7))
     assert(got.map(_._3).sum > 0 && got.map(_._4).sum > 0 && got.map(_._6).sum > 0,
       "short/long/stop rules must each fire on testdata")
     assert(got.map(_._7).sum < got.map(_._2).sum, "must not reject the whole corpus")

@@ -45,7 +45,7 @@ class MixFairnessSpec extends SparkSpec {
     if (u > 0) {
       val base = rem / u
       val extra = (rem % u).toInt
-      uncapped.zipWithIndex.foreach { case ((l, c), i) =>
+      uncapped.zipWithIndex.foreach { case ((l, _), i) =>
         out += l -> (base + (if (i < extra) 1L else 0L), false)
       }
     }

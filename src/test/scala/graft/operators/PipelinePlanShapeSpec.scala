@@ -56,8 +56,10 @@ class PipelinePlanShapeSpec extends SparkSpec {
     // the % 20 sample must prune BEFORE the tf explode — in the scan's
     // pushed/post-scan filters, not after a Generate
     val genIdx = p.indexOf("Generate")
-    val filterIdx = p.indexOf("(doc_id")
+    val filterIdx = p.indexOf("% 20) = 0)")
     assert(filterIdx >= 0, "sample filter missing from the plan")
+    // the plan prints root-first, so a filter below the Generate prints after it
+    assert(genIdx >= 0 && filterIdx > genIdx, s"sample filter must run before the tf explode:\n$p")
     assert(p.contains("WindowGroupLimit"),
       "top-k per doc must use the rank-limit pushdown, not a full window sort")
   }

@@ -104,7 +104,6 @@ class EventStreamsSpec extends SparkSpec {
   }
 
   test("stream-static enrichment joins the broadcast dim and rolls up by category") {
-    implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val typeDim = Seq(("click", "engagement"), ("view", "engagement"),
       ("purchase", "revenue")).toDF("event_type", "category")

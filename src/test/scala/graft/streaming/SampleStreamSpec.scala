@@ -29,7 +29,7 @@ class SampleStreamSpec extends SparkSpec {
 
   /** Latest emission per lang after the stream settles. */
   private def runStream(batches: Seq[Seq[Doc]], name: String,
-      check: (Seq[Doc], Map[String, Seq[Long]]) => Unit = (_, _) => ()): Unit = {
+      check: (Seq[Doc], Map[String, Seq[Long]]) => Unit): Unit = {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Doc]
     val query = SampleStream.samples(spark, input.toDS())
@@ -64,7 +64,6 @@ class SampleStreamSpec extends SparkSpec {
 
   test("micro-batch boundaries don't change the settled sample") {
     val docs = corpus
-    implicit val sqlCtx = spark.sqlContext
     def settled(batches: Seq[Seq[Doc]], name: String): Map[String, Seq[Long]] = {
       var out = Map.empty[String, Seq[Long]]
       runStream(batches, name, (_, latest) => out = latest)
